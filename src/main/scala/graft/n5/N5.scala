@@ -10,12 +10,6 @@ import org.apache.spark.sql.types.DataType
   */
 object N5 {
 
-  /** Hadoop conf for executor-side block access: one per JVM, not one per
-    * task group (Configuration construction re-parses default resources).
-    */
-  @transient private lazy val taskConf =
-    new org.apache.hadoop.conf.Configuration()
-
   /** Reject non-integral numeric input BEFORE an integer cast — ANSI cast
     * only errors on overflow, so 3.7 would otherwise truncate to 3
     * silently (the fail-loudly discipline, `n5_to_tif.py:28`).
@@ -44,7 +38,7 @@ object N5 {
     */
   def readGroup(spark: SparkSession, root: String, group: String): DataFrame = {
     val base = new org.apache.hadoop.fs.Path(root, group)
-    val fs = base.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = graft.HadoopConf.fs(base)
     require(fs.exists(base), s"no N5 group at $base")
     val chRe = "c(\\d+)".r
     val lvRe = "s(\\d+)".r
@@ -298,7 +292,7 @@ object N5 {
     // directory walk bounded to the box's grid range (one listStatus per
     // surviving directory) — no Spark job at plan-construction time.
     val dsPath = new org.apache.hadoop.fs.Path(root, dataset)
-    val fs = dsPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = graft.HadoopConf.fs(dsPath)
     val present = graft.sources.n5.N5GridWalk
       .listChunks(fs, dsPath, attrs, (axis, v) => v >= g0(axis) && v <= g1(axis))
       .map { case (g, _) => (g(0), g(1), g(2)) }.toSet
@@ -437,7 +431,7 @@ object N5 {
           // partial cover: start from the stored block (zeros when absent)
           val path = new org.apache.hadoop.fs.Path(
             root, s"$dataset/${grid.mkString("/")}")
-          val fs = path.getFileSystem(taskConf)
+          val fs = graft.HadoopConf.fs(path)
           if (fs.exists(path)) {
             val raw = graft.sources.n5.N5BlockIO.readAllBytes(fs, path)
             val dec = BlockCodec.decode(raw, attrs.dataType, attrs.compression)
@@ -579,7 +573,7 @@ object N5 {
       dataType = dtype.getOrElse(t.dataType))
     if (overwrite) {
       val p = new org.apache.hadoop.fs.Path(outRoot, outDataset)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = graft.HadoopConf.fs(p)
       if (fs.exists(p)) fs.delete(p, true)
     }
     N5Meta.ensureRoot(outRoot)

@@ -2,8 +2,8 @@ package graft.n5
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.HadoopConf.fs
+import org.apache.hadoop.fs.Path
 import scala.jdk.CollectionConverters._
 
 /** N5 element dtype with its JVM widening (JVM has no unsigned types, so
@@ -205,8 +205,6 @@ final case class DatasetAttributes(
 object N5Meta {
   // ObjectMapper is thread-safe once configured; share a single instance
   private val mapper = new ObjectMapper()
-
-  private def fs(p: Path): FileSystem = p.getFileSystem(new Configuration())
 
   def readJson(p: Path): JsonNode = {
     val in = fs(p).open(p)

@@ -25,7 +25,7 @@ object N5Queries {
   private def tmpRoot(name: String): String = {
     val p = s"${System.getProperty("java.io.tmpdir")}/graft_$name.n5"
     val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = graft.HadoopConf.fs(hp)
     if (fs.exists(hp)) fs.delete(hp, true)
     p
   }

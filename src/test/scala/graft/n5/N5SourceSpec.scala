@@ -54,14 +54,17 @@ class N5SourceSpec extends SparkSpec {
     assert(df.count() == 2)
   }
 
+  private def partitions(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b
+    }.get.inputPartitions
+
   test("blocks group into size-targeted partitions (task-count control)") {
-    // default 128 MiB target: all 4 fixture blocks (2 MiB decoded each)
-    // land in one partition
-    def partitions(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b
-      }.get.inputPartitions
-    assert(partitions(N5.read(spark, fixtureRoot, fixtureDs)).length == 1)
+    // the 4 fixture blocks (2 MiB decoded each) are far below the 128 MiB
+    // target; the per-core cap still gives every core a block
+    val cores = spark.sparkContext.defaultParallelism
+    assert(partitions(N5.read(spark, fixtureRoot, fixtureDs)).length ==
+      math.min(4, cores))
     // per-block tasks restored via maxBlocksPerPartition=1
     val perBlock = spark.read.format("n5")
       .option("dataset", fixtureDs)
@@ -69,6 +72,29 @@ class N5SourceSpec extends SparkSpec {
       .load(fixtureRoot)
     assert(partitions(perBlock).length == 4)
     assert(perBlock.count() == 4)
+  }
+
+  test("targetPartitionBytes still caps grouping when blocks outnumber cores") {
+    // 128 uint8 blocks of 5x5x4 = 100 B over 40x40x8
+    val root = Files.createTempDirectory("n5parts").toString + "/p.n5"
+    val attrs = DatasetAttributes(Array(40L, 40L, 8L), Array(5, 5, 4),
+      Dtype.UInt8, Compression("gzip"))
+    val elems = spark.range(40L * 40 * 8).select(
+      (col("id") % 40).as("x"), (col("id") / 40 % 40).cast("long").as("y"),
+      (col("id") / 1600).cast("long").as("z"), (col("id") % 7).cast("short").as("v"))
+    N5.write(N5.blocksFromElements(elems, attrs,
+      graft.sources.n5.N5Schema.elementType(Dtype.UInt8)), root, "v", attrs)
+    def scan(opts: (String, String)*) =
+      opts.foldLeft(spark.read.format("n5").option("dataset", "v"))(
+        (r, kv) => r.option(kv._1, kv._2)).load(root)
+    val cores = spark.sparkContext.defaultParallelism
+    val perCore = (128 + cores - 1) / cores
+    // default target: ⌈128 / cores⌉ blocks per partition
+    assert(partitions(scan()).length == (128 + perCore - 1) / perCore)
+    // a 1000 B target holds 10 blocks, below the per-core cap
+    assert(partitions(scan("targetPartitionBytes" -> "1000")).length == 13)
+    assert(partitions(scan("maxBlocksPerPartition" -> "1")).length == 128)
+    assert(scan("targetPartitionBytes" -> "1000").count() == 128)
   }
 
   test("readBox returns exactly the requested box (ref read_n5_block)") {

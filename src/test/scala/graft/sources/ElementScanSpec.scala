@@ -15,10 +15,12 @@ class ElementScanSpec extends SparkSpec {
 
   private val dims = Array(12L, 10L, 6L)
 
-  private def volume(dtype: Dtype): (String, String) = {
+  private def volume(
+      dtype: Dtype, dims: Array[Long] = dims,
+      blockSize: Array[Int] = Array(5, 4, 3)): (String, String) = {
     val root = Files.createTempDirectory("elemscan").toString + "/t.n5"
     val ds = "vol/s0"
-    val attrs = DatasetAttributes(dims, Array(5, 4, 3), dtype, Compression("gzip"))
+    val attrs = DatasetAttributes(dims, blockSize, dtype, Compression("gzip"))
     val elemT = N5Schema.elementType(dtype)
     val elems = spark.range(dims.product)
       .select((col("id") % dims(0)).as("x"),
@@ -42,6 +44,54 @@ class ElementScanSpec extends SparkSpec {
       assert(columnar.size == dims.product)
       assert(columnar == lazyView, s"${dtype.name} columnar/lazy divergence")
     }
+  }
+
+  // the reader trims each block to the box the pushed x/y/z filters allow;
+  // every case must return exactly the lazy view's rows under the filter
+  // (3x3x2 grid of 5x4x3 blocks over 12x10x6, edge blocks trimmed)
+  private val trimCases: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+    "no filter: every voxel of every block" -> lit(true),
+    "box strictly inside block (1,1,1)" ->
+      (col("x").between(6, 8) && col("y").between(5, 6) && col("z") === 4),
+    "box straddling block edges on all axes" ->
+      (col("x") > 3 && col("x") <= 10 && col("y") >= 2 && col("y") < 9 &&
+        col("z").between(1, 4)),
+    "EqualTo and In" -> (col("x") === 7 && col("y").isin(1, 6, 9) && col("z") === 4),
+    "In spanning blocks with a gap" -> col("x").isin(0, 11),
+    "empty: outside the extent" -> (col("x") > 100),
+    // the two below keep a block file (its untrimmed range can match) whose
+    // trimmed sub-box is empty: the reader must skip it, not misread it
+    "empty: no integer between the bounds" -> (col("x") > 6 && col("x") < 7),
+    "empty: past the trimmed edge block" -> (col("x") >= 13),
+    "empty: In outside the extent" -> col("z").isin(-5, 40))
+
+  for ((name, f) <- trimCases) {
+    test(s"trimmed element scan equals the filtered lazy view: $name") {
+      val (root, ds) = volume(Dtype.UInt16)
+      def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.filter(f).orderBy(col("z"), col("y"), col("x"))
+          .collect().map(_.mkString("|")).toSeq
+      val lazyView = canon(N5.elements(N5.read(spark, root, ds)))
+      assert(canon(N5.elementsScan(spark, root, ds)) == lazyView)
+      if (name.startsWith("no filter")) assert(lazyView.size == dims.product)
+      if (name.startsWith("empty")) assert(lazyView.isEmpty)
+    }
+  }
+
+  test("a 64^3 box straddling four blocks emits only its 262144 voxels") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    // 96x96x64 in 64^3 blocks: [32,96) x [32,96) x [0,64) touches all four
+    // blocks, whose untrimmed voxels number 96*96*64 = 589824
+    val (root, ds) = volume(Dtype.UInt8, Array(96L, 96L, 64L), Array(64, 64, 64))
+    val df = N5.readBox(spark, root, ds, Array(32L, 32L, 0L), Array(96L, 96L, 64L))
+    assert(df.collect().length == 262144)
+    val scan = df.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b
+    }.get
+    assert(scan.inputPartitions.map {
+      case p: N5BlocksPartition => p.grids.length
+    }.sum == 4)
+    assert(scan.metrics("numOutputRows").value == 262144L)
   }
 
   /** Rewrite block file `g` of a volume as a varlength (mode-1) block
